@@ -138,10 +138,12 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _follow(spark, args) -> int:
+def _follow(spark, args, scan: ScanOptions) -> int:
     """Continuous dump: ``esdump`` timeslice stream → parquet/ndjson
     sink with checkpointed exactly-once delivery. The batch scan's
-    one-shot dump becomes `tail -f` for an index."""
+    one-shot dump becomes `tail -f` for an index: each micro-batch
+    slice is read with the batch dump's ``scan`` options (cursor, PIT,
+    query, fields, sort, size, slices, flatten, multivalue)."""
     import os
 
     from dump_es_parquet_spark.sources.datasource import register
@@ -166,16 +168,11 @@ def _follow(spark, args) -> int:
     register(spark)
     b = (
         spark.readStream.format("esdump")
+        .options(**scan.esdump_options())
         .option("index", args.index)
         .option("stream_mode", "timeslice")
         .option("ts_field", args.ts_field)
-        .option("slices", str(args.slices))
-        .option("size", str(args.size))
-        .option("flatten", "true" if args.flatten else "false")
-        .option("multivalue", args.multivalue)
     )
-    if args.query:
-        b = b.option("query", args.query)
     if args.chunk_seconds:
         b = b.option("chunk_seconds", str(args.chunk_seconds))
     fixture_path = getattr(args, "fixture_json", None)
@@ -377,7 +374,7 @@ def main(argv: list[str] | None = None) -> int:
         print(f"restored {n} documents into {args.index}", file=sys.stderr)
         return 0
     if args.follow:
-        return _follow(spark, args)
+        return _follow(spark, args, scan)
     result = dump(spark, client_factory, args.index, args.out, scan, sink,
                   attributes=attributes)
     for line in result.warning_report():

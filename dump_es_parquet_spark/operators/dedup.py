@@ -1478,43 +1478,45 @@ def _component_min_labels(pairs: DataFrame) -> DataFrame:
         )
     n_edges = pairs.count()  # pairs is caller-cached; this is cheap
     _ensure_checkpoint_dir(spark)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    fix_p = max(1, min(int(prev_sp), (n_edges // 500_000) + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(fix_p))
-    try:
-        labels = (
-            sym.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
+    max_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    fix_p = max(1, min(max_p, (n_edges // 500_000) + 1))
+    # explicit widths on the edge and label frames instead of a
+    # session-wide shuffle.partitions override (which any concurrent
+    # query would inherit); the rounds' own join/aggregate shuffles are
+    # left to AQE, which coalesces them to the data
+    sym = sym.repartition(fix_p, "src")
+    labels = (
+        sym.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+        .repartition(fix_p, "node")
+        .checkpoint(eager=True)
+    )
+    while True:
+        neighbor_min = (
+            sym.join(labels, sym["src"] == labels["node"])
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("label").alias("nlabel"))
+        )
+        new_labels = (
+            labels.join(neighbor_min, "node", "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("label"), F.coalesce("nlabel", F.col("label"))
+                ).alias("label"),
+            )
             .checkpoint(eager=True)
         )
-        while True:
-            neighbor_min = (
-                sym.join(labels, sym["src"] == labels["node"])
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("label").alias("nlabel"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce("nlabel", F.col("label"))
-                    ).alias("label"),
-                )
-                .checkpoint(eager=True)
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                return labels
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
+            .filter(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            return labels
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

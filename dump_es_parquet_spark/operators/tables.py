@@ -104,38 +104,33 @@ def one_slice_frame(spark: SparkSession, rows, schema) -> DataFrame:
     runners. The pickled-local RDD this replaces launched a Python
     worker per materialization (~150 ms each; measured 0.30 s →
     0.065 s per broadcast-side build, r18), and percolate_bulk alone
-    materializes 7-10 such sides per run. pyarrow raises on lossy
-    conversions, preserving the type-exact-rows contract; NULLs and
-    array columns round-trip exactly (None ≠ NaN — verified by test,
-    which is why this does NOT go through pandas). Rows a pa.array
-    cannot represent fall back to the one-slice pickled RDD."""
-    rows = list(rows)
-    try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import _parse_datatype_string
+    materializes 7-10 such sides per run. NULLs and array columns
+    round-trip exactly (None ≠ NaN — verified by test, which is why
+    this does NOT go through pandas). pyarrow does NOT reject every
+    lossy conversion (``pa.array([1.5], pa.int32())`` silently gives
+    ``[1]``), so callers must hand over values of the schema's types.
+    Rows a pa.array cannot represent (the conversion errors pyarrow
+    raises: ``ArrowInvalid``, ``ArrowTypeError``, ``OverflowError``)
+    fall back to the one-slice pickled RDD; any other error
+    propagates."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-        st = (
-            schema
-            if isinstance(schema, T.StructType)
-            else _parse_datatype_string(schema)
-        )
-        pa_schema = to_arrow_schema(st)
-        cols = list(zip(*rows)) or [[] for _ in pa_schema]
+    rows = list(rows)
+    st = schema if isinstance(schema, T.StructType) else _parse_datatype_string(schema)
+    pa_schema = to_arrow_schema(st)
+    cols = list(zip(*rows)) or [[] for _ in pa_schema]
+    try:
         tbl = pa.Table.from_arrays(
-            [
-                pa.array(list(c), type=f.type)
-                for c, f in zip(cols, pa_schema)
-            ],
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, pa_schema)],
             schema=pa_schema,
         )
-        # createDataFrame slices the table defaultParallelism ways;
-        # coalesce(1) (narrow, no shuffle) keeps the one-slice shape
-        return spark.createDataFrame(tbl).coalesce(1)
-    except Exception:
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schema
-        )
+    except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    # createDataFrame slices the table defaultParallelism ways;
+    # coalesce(1) (narrow, no shuffle) keeps the one-slice shape
+    return spark.createDataFrame(tbl).coalesce(1)
 
 
 def _scan_splits_at_least(df: DataFrame, n: int) -> bool:

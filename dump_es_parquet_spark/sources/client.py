@@ -33,7 +33,7 @@ import urllib.error
 import urllib.parse
 import urllib.request
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterable
+from typing import Any, Callable, Iterator
 
 
 class TransportError(Exception):
@@ -603,7 +603,7 @@ def with_sort_tiebreaker(sort: str | None, pit: bool) -> str:
     return f"{sort},{tb}" if sort else tb
 
 
-def iter_hits_search_after(
+def iter_pages_search_after(
     client,
     index: str,
     *,
@@ -616,23 +616,26 @@ def iter_hits_search_after(
     backoff_s: float = 1.0,
     pit: bool = False,
     keep_alive: str = "1h",
-) -> Iterable[dict]:
+    search_after: list | None = None,
+) -> Iterator[tuple[list[dict], list | None]]:
     """``search_after`` pagination loop — the retry-idempotent cursor
     (SURVEY.md §7 hard part 2): unlike a scroll id, the sort-key cursor
     is *resumable*, so a retried page re-requests exactly where the
     last successful page ended instead of consuming a one-shot
     server-side cursor.
 
+    Yields each page's hits with the cursor that resumes after it;
+    ``search_after`` resumes after such a cursor (None → from the
+    start, the first request then omits ``search_after`` entirely).
     The sort always ends in a unique tie-breaker (see
-    ``with_sort_tiebreaker``) and the first page omits ``search_after``
-    entirely. With ``pit=True`` a point-in-time context is opened per
-    slice and threaded through every page, giving the same snapshot
-    isolation as the reference's scroll context
-    (dump-es-parquet:224,261) — without it, a dump concurrent with
-    writes can see skew or duplicates."""
+    ``with_sort_tiebreaker``). With ``pit=True`` a point-in-time
+    context is opened per slice and threaded through every page,
+    giving the same snapshot isolation as the reference's scroll
+    context (dump-es-parquet:224,261) — without it, a dump concurrent
+    with writes can see skew or duplicates."""
     sort_eff = with_sort_tiebreaker(sort, pit)
     pit_id = client.open_pit(index, keep_alive)["id"] if pit else None
-    cursor: list | None = None  # None → first page, omit search_after
+    cursor = search_after
     try:
         while True:
             resp = with_retry(
@@ -654,8 +657,8 @@ def iter_hits_search_after(
             hits = resp["hits"]["hits"]
             if not hits:
                 return
-            yield from hits
             nxt = resp.get("last_sort")
+            yield hits, cursor if nxt is None else nxt
             if nxt is None or nxt == cursor:
                 return
             cursor = nxt
@@ -667,7 +670,7 @@ def iter_hits_search_after(
                 pass
 
 
-def iter_hits(
+def iter_pages_scroll(
     client,
     index: str,
     *,
@@ -679,9 +682,9 @@ def iter_hits(
     slice_spec: dict | None = None,
     max_retries: int | None = 3,
     backoff_s: float = 1.0,
-) -> Iterable[dict]:
+) -> Iterator[list[dict]]:
     """Scroll loop for one slice: initial search + scroll-until-empty
-    (reference ``:219-302``), yielding raw hit dicts."""
+    (reference ``:219-302``), yielding each page's raw hit dicts."""
     resp = with_retry(
         lambda: client.search(
             index,
@@ -703,7 +706,7 @@ def iter_hits(
         hits = resp["hits"]["hits"]
         if not hits:
             return
-        yield from hits
+        yield hits
         sid = resp.get("_scroll_id")
         if sid is None:
             return
@@ -712,3 +715,23 @@ def iter_hits(
             max_retries=max_retries,
             backoff_s=backoff_s,
         )
+
+
+def iter_hits_search_after(
+    client, index: str, *, q: str | None, _source: list[str] | None,
+    sort: str | None, size: int, slice_spec: dict | None = None,
+    max_retries: int | None = 3, backoff_s: float = 1.0, pit: bool = False,
+    keep_alive: str = "1h",
+) -> Iterator[dict]:
+    """The hits of :func:`iter_pages_search_after`, from the start."""
+    pages = iter_pages_search_after(
+        client, index, q=q, _source=_source, sort=sort, size=size,
+        slice_spec=slice_spec, max_retries=max_retries, backoff_s=backoff_s,
+        pit=pit, keep_alive=keep_alive,
+    )
+    return (hit for hits, _ in pages for hit in hits)
+
+
+def iter_hits(client, index: str, **kw) -> Iterator[dict]:
+    """The hits of :func:`iter_pages_scroll` (same keywords)."""
+    return (hit for hits in iter_pages_scroll(client, index, **kw) for hit in hits)

@@ -10,10 +10,17 @@ Spark-native ``df.filter(...)`` calls.
 
 Options:
 
-- ``url``: ES/OS base URL (RestES), or ``fixture_json``: canned
-  fixture (MockES — tests)
-- ``index`` (required), ``query``, ``fields``, ``sort``, ``size``,
-  ``scroll``, ``slices``, ``flatten``, ``multivalue``, ``timeout``
+- the server: ``url`` (RestES, with ``timeout``, ``cert``, ``key``,
+  ``capath``, ``verify_certs``), or ``fixture_json``: canned fixture
+  (MockES — tests); ``index`` (required)
+- the scan, parsed into one ``ScanOptions`` (``ScanOptions.from_esdump``)
+  and read slice by slice through ``scan.iter_slice`` like the batch
+  dump: ``query``, ``fields``, ``sort``, ``size``, ``scroll`` (cursor
+  TTL), ``cursor`` (``search_after`` default, or ``scroll``), ``pit``
+  (``false``: search_after without a point-in-time, single-slice),
+  ``slices``, ``flatten``, ``multivalue``
+- streaming only (``streaming/es_stream.py``): ``stream_mode``,
+  ``pages_per_batch``, ``ts_field``, ``start_ts``, ``chunk_seconds``
 
 Rows are coerced *in the reader* with the pure-Python twin of the
 expression coercion (``coerce_py``) — the data is already Python
@@ -44,7 +51,8 @@ Register per-session with ``register(spark)``.
 from __future__ import annotations
 
 import json
-from typing import Iterator, Sequence
+from dataclasses import replace
+from typing import Iterable, Iterator, Sequence
 
 import datetime as _dt
 
@@ -69,8 +77,13 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from dump_es_parquet_spark.coerce_py import coerce_doc, flatten_doc
-from dump_es_parquet_spark.schema import mapping_response_to_struct
-from dump_es_parquet_spark.sources.client import iter_hits, with_retry
+from dump_es_parquet_spark.sources.client import with_retry
+from dump_es_parquet_spark.sources.scan import (
+    ScanOptions,
+    effective_slices,
+    fetch_schema,
+    iter_slice,
+)
 
 
 def _make_client(options: dict):
@@ -89,6 +102,18 @@ def _make_client(options: dict):
         capath=options.get("capath"),
         verify_certs=options.get("verify_certs", "true") != "false",
     )
+
+
+def coerce_hits(
+    hits: Iterable[dict], schema: StructType, opts: ScanOptions
+) -> Iterator[tuple]:
+    """Hits → rows in ``schema`` order: every ``esdump`` reader's one
+    coercion pass over ``_source`` (flattened first under ``flatten``)."""
+    for hit in hits:
+        src = hit["_source"]
+        if opts.flatten:
+            src = flatten_doc(src)
+        yield coerce_doc(src, schema, opts.multivalue)
 
 
 def _lucene_escape(v) -> str:
@@ -168,15 +193,10 @@ class EsDumpDataSource(DataSource):
         return "esdump"
 
     def schema(self) -> StructType:
-        client = _make_client(self.options)
-        mapping = with_retry(
-            lambda: client.get_mapping(self.options["index"]), max_retries=3,
-            backoff_s=1.0,
-        )
-        return mapping_response_to_struct(
-            mapping,
-            flatten=self.options.get("flatten", "false") == "true",
-            multivalue=self.options.get("multivalue", "first"),
+        return fetch_schema(
+            _make_client(self.options),
+            self.options["index"],
+            ScanOptions.from_esdump(self.options),
         )
 
     #: ES types with exact-term query_string semantics — equality
@@ -229,10 +249,11 @@ class EsDumpDataSource(DataSource):
 
     def reader(self, schema: StructType) -> "EsDumpReader":
         client = _make_client(self.options)
+        opts = ScanOptions.from_esdump(self.options)
         mapping = with_retry(
             lambda: client.get_mapping(self.options["index"]),
-            max_retries=3,
-            backoff_s=1.0,
+            max_retries=opts.max_retries,
+            backoff_s=opts.backoff_s,
         )
         props = next(iter(mapping.values()))["mappings"].get("properties", {})
         # typed leaf fields only: object fields (bare "properties") are
@@ -269,6 +290,7 @@ class EsDumpReader(DataSourceReader):
     ):
         self.schema = schema
         self.options = options
+        self.scan = ScanOptions.from_esdump(options)
         # default: nothing pushable without mapping info
         self.pushable = pushable if pushable is not None else set()
         self.field_types = field_types if field_types is not None else {}
@@ -334,12 +356,12 @@ class EsDumpReader(DataSourceReader):
         but the excluded column comes back NULL — so a consumed
         ``_exists_:load`` (or ``load:3``) would return rows whose
         ``load`` column is NULL, contradicting the Spark predicate."""
-        pats = self.options.get("fields")
+        pats = self.scan.source_includes()
         if not pats:
             return True
         import fnmatch
 
-        return any(fnmatch.fnmatch(fld, p.strip()) for p in pats.split(","))
+        return any(fnmatch.fnmatch(fld, p) for p in pats)
 
     def _translate(self, f: "Filter") -> str | None:
         if isinstance(f, Not):
@@ -432,7 +454,7 @@ class EsDumpReader(DataSourceReader):
         return None
 
     def _query(self) -> str | None:
-        user = self.options.get("query")
+        user = self.scan.query
         clauses = ([user] if user else []) + self.pushed_clauses
         if not clauses:
             return None
@@ -444,66 +466,20 @@ class EsDumpReader(DataSourceReader):
         # consumed pushdown filter is trusted, nothing re-checks rows
         return " AND ".join(f"({c})" for c in clauses)
 
-    def _n_slices(self) -> int:
-        """Real ES rejects the ``slice`` parameter on a plain search
-        (slicing needs a PIT or scroll context), so ``search_after``
-        without PIT (``pit=false``, pre-7.10 servers) is forced
-        single-slice — otherwise N partitions would each scan the full
-        index."""
-        if (
-            self.options.get("cursor", "search_after") == "search_after"
-            and self.options.get("pit", "true") == "false"
-        ):
-            return 1
-        return max(1, int(self.options.get("slices", "8")))
-
     def partitions(self) -> Sequence[InputPartition]:
-        return [InputPartition(i) for i in range(self._n_slices())]
+        return [InputPartition(i) for i in range(effective_slices(self.scan))]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        client = _make_client(self.options)
-        n = self._n_slices()
-        fields = self.options.get("fields")
-        flatten = self.options.get("flatten", "false") == "true"
-        multivalue = self.options.get("multivalue", "first")
-        spec = {"id": partition.value, "max": n} if n > 1 else None
-        common = dict(
-            q=self._query(),
-            _source=[f.strip() for f in fields.split(",")] if fields else None,
-            sort=self.options.get("sort"),
-            size=int(self.options.get("size", "500")),
-            slice_spec=spec,
-            max_retries=3,
-            backoff_s=1.0,
+        opts = replace(self.scan, query=self._query())
+        pages = iter_slice(
+            _make_client(self.options),
+            self.options["index"],
+            opts,
+            partition.value,
+            effective_slices(opts),
         )
-        if self.options.get("cursor", "search_after") == "scroll":
-            # reference-parity option; the default is the
-            # retry-idempotent cursor (a retried Spark task re-runs its
-            # slice against a fresh PIT snapshot instead of a
-            # consumed-once scroll id) — see ScanOptions.cursor.
-            hits = iter_hits(
-                client,
-                self.options["index"],
-                scroll=self.options.get("scroll", "1h"),
-                **common,
-            )
-        else:
-            from dump_es_parquet_spark.sources.client import (
-                iter_hits_search_after,
-            )
-
-            hits = iter_hits_search_after(
-                client,
-                self.options["index"],
-                pit=self.options.get("pit", "true") != "false",
-                keep_alive=self.options.get("scroll", "1h"),
-                **common,
-            )
-        for hit in hits:
-            src = hit["_source"]
-            if flatten:
-                src = flatten_doc(src)
-            yield coerce_doc(src, self.schema, multivalue)
+        for hits, _ in pages:
+            yield from coerce_hits(hits, self.schema, opts)
 
 
 def register(spark) -> None:

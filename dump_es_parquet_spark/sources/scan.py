@@ -3,11 +3,12 @@
 The reference scans one sequential scroll per index
 (``dump-es-parquet:219-302``) — client parallelism 1. Here the scan is
 *sliced*: the index is split into N server-side slices (ES sliced
-scroll), one Spark task per slice, each task running its own
-scroll loop on an executor. That moves the reference's only
+PIT or scroll), one Spark task per slice, each task running its own
+page loop on an executor. That moves the reference's only
 thread/node boundary (HTTP round-trips) onto the cluster and is what
-makes a 100 TB dump feasible — N tasks × scroll batches instead of one
-cursor.
+makes a 100 TB dump feasible — N tasks × page batches instead of one
+cursor. ``iter_slice`` is that page loop for every reader: this scan,
+the ``esdump`` DataSource and both ``esdump`` stream readers.
 
 Pushdown parity (SURVEY.md ops #7-#10): ``query`` (Lucene
 query_string), ``fields`` (``_source`` includes, wildcards), ``sort``
@@ -24,6 +25,7 @@ order and skips the shuffle.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, replace
 from typing import Callable, Iterator
 
@@ -32,7 +34,11 @@ from pyspark.sql import functions as F
 
 from dump_es_parquet_spark.coerce import parse_and_coerce
 from dump_es_parquet_spark.schema import mapping_response_to_struct
-from dump_es_parquet_spark.sources.client import iter_hits, with_retry
+from dump_es_parquet_spark.sources.client import (
+    iter_pages_scroll,
+    iter_pages_search_after,
+    with_retry,
+)
 
 DEFAULT_SORT = "@timestamp:asc"  # reference default (dump-es-parquet:380)
 
@@ -65,6 +71,38 @@ class ScanOptions:
     def source_includes(self) -> list[str] | None:
         return [f.strip() for f in self.fields.split(",")] if self.fields else None
 
+    @classmethod
+    def from_esdump(cls, options, sort: str | None = None) -> "ScanOptions":
+        """The ``esdump`` DataSource's string options → ScanOptions;
+        ``sort`` is the calling reader's default when no ``sort``
+        option is given."""
+        parsed = {
+            name: parse(options[name])
+            for name, parse in ESDUMP_OPTIONS.items()
+            if name in options
+        }
+        return cls(**{"sort": sort, **parsed})
+
+    def esdump_options(self) -> dict[str, str]:
+        """The inverse of :meth:`from_esdump`: these options as
+        ``esdump`` string options (unset ones omitted)."""
+        out = {}
+        for name in ESDUMP_OPTIONS:
+            v = getattr(self, name)
+            if v is not None:
+                out[name] = str(v).lower() if isinstance(v, bool) else str(v)
+        return out
+
+
+#: ``esdump`` option name → parser, for the options that are scan
+#: options (the rest — ``url``, ``index``, ``stream_mode``, ... —
+#: address the server or pick a reader)
+ESDUMP_OPTIONS = dict(
+    query=str, fields=str, sort=str, size=int, scroll=str, cursor=str,
+    pit=lambda v: v != "false", slices=int,
+    flatten=lambda v: v == "true", multivalue=str,
+)
+
 
 def effective_slices(opts: ScanOptions) -> int:
     """Real ES rejects the ``slice`` parameter on a plain search —
@@ -77,55 +115,41 @@ def effective_slices(opts: ScanOptions) -> int:
     return max(1, opts.slices)
 
 
-def _slice_reader(
-    client_factory: Callable[[], object],
+def iter_slice(
+    client,
     index: str,
     opts: ScanOptions,
-    n_slices: int,
-):
-    """Returns the per-partition function executed on executors: runs
-    one sliced scroll loop, emits raw ``_source`` JSON strings."""
-    import json
-
-    def read_slices(slice_ids: Iterator[int]) -> Iterator[str]:
-        from dump_es_parquet_spark.sources.client import iter_hits_search_after
-
-        client = client_factory()
-        for sid in slice_ids:
-            spec = {"id": sid, "max": n_slices} if n_slices > 1 else None
-            if opts.cursor == "search_after":
-                hits = iter_hits_search_after(
-                    client,
-                    index,
-                    q=opts.query,
-                    _source=opts.source_includes(),
-                    sort=opts.sort,
-                    size=opts.size,
-                    slice_spec=spec,
-                    max_retries=opts.max_retries,
-                    backoff_s=opts.backoff_s,
-                    pit=opts.pit,
-                    keep_alive=opts.scroll,  # same TTL knob as scroll mode
-                )
-            else:
-                hits = iter_hits(
-                    client,
-                    index,
-                    q=opts.query,
-                    _source=opts.source_includes(),
-                    sort=opts.sort,
-                    size=opts.size,
-                    scroll=opts.scroll,
-                    slice_spec=spec,
-                    max_retries=opts.max_retries,
-                    backoff_s=opts.backoff_s,
-                )
-            for hit in hits:
-                # only _source is read; ES metadata is discarded
-                # (reference :243, 247, 252)
-                yield json.dumps(hit["_source"])
-
-    return read_slices
+    slice_id: int = 0,
+    n_slices: int = 1,
+    *,
+    after: list | None = None,
+) -> Iterator[tuple[list[dict], list | None]]:
+    """Pages of slice ``slice_id`` of ``n_slices``, each with the
+    cursor that resumes after it (None under scroll). The one place
+    that decides how a slice is read: the cursor, the pushed query,
+    ``_source`` includes, sort, page size and retries all come from
+    ``opts``; ``after`` resumes a ``search_after`` cursor (a scroll
+    always starts from the beginning)."""
+    kw = dict(
+        q=opts.query,
+        _source=opts.source_includes(),
+        sort=opts.sort,
+        size=opts.size,
+        slice_spec={"id": slice_id, "max": n_slices} if n_slices > 1 else None,
+        max_retries=opts.max_retries,
+        backoff_s=opts.backoff_s,
+    )
+    if opts.cursor == "search_after":
+        return iter_pages_search_after(
+            client,
+            index,
+            pit=opts.pit,
+            keep_alive=opts.scroll,  # same TTL knob as scroll mode
+            search_after=after,
+            **kw,
+        )
+    pages = iter_pages_scroll(client, index, scroll=opts.scroll, **kw)
+    return ((hits, None) for hits in pages)
 
 
 def expand_pattern(client, pattern: str, opts: ScanOptions) -> list[str]:
@@ -166,10 +190,18 @@ def read_index_raw(
     IO is the one place RDD usage is warranted (SURVEY.md §7).
     """
     opts = opts or ScanOptions()
-    n = max(1, effective_slices(opts))
-    rdd = spark.sparkContext.parallelize(range(n), n).mapPartitions(
-        _slice_reader(client_factory, index, opts, n)
-    )
+    n = effective_slices(opts)
+
+    def read_slices(slice_ids: Iterator[int]) -> Iterator[str]:
+        client = client_factory()
+        for sid in slice_ids:
+            for hits, _ in iter_slice(client, index, opts, sid, n):
+                for hit in hits:
+                    # only _source is read; ES metadata is discarded
+                    # (reference :243, 247, 252)
+                    yield json.dumps(hit["_source"])
+
+    rdd = spark.sparkContext.parallelize(range(n), n).mapPartitions(read_slices)
     return spark.createDataFrame(rdd.map(lambda v: (v,)), "value string")
 
 

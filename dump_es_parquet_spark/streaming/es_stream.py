@@ -3,11 +3,8 @@
 The reference's scroll loop is a *batch-incremental pull with a
 server-held cursor* (``dump-es-parquet:259-302``) — already
 streaming-shaped. This module completes the thought (SURVEY.md §2.2
-"streaming" row): an ``esdump`` micro-batch stream where each batch is
-a bounded run of ``search_after`` pages and the **offset is the sort
-cursor** — resumable, checkpointable, replayable (the same property
-that makes task retries safe in the batch scan makes exactly-once
-micro-batches possible here).
+"streaming" row): an ``esdump`` stream whose micro-batches are
+resumable, checkpointable and replayable.
 
 Registered through the same ``esdump`` DataSource:
 
@@ -15,23 +12,33 @@ Registered through the same ``esdump`` DataSource:
          .option("index", ...).option(...)  # same options as batch
          .load()
 
-Two readers share the ``esdump`` format:
+Both readers parse the scan options into one ``ScanOptions`` as the
+batch reader does, and read through the batch scan's slice iterator
+(``scan.iter_slice``):
 
 - ``EsDumpStreamReader`` (default): ``SimpleDataSourceStreamReader``,
-  driver-side reads over a single search_after cursor. Correct for
-  moderate ingest rates; zero executor coordination.
-- ``EsDumpTimeSliceStreamReader`` (``stream_mode=timeslice``): a full
-  ``DataSourceStreamReader`` whose offset is a **timestamp watermark**
-  and whose micro-batches fan out over N server-side slices read *on
-  executors* — the scale path for log-style indices (the reference's
-  domain is monitoring logs with ``@timestamp``). Each batch is the
-  half-open range ``(start_ts, end_ts]`` pushed down as a Lucene range
-  clause, so replay of a committed batch is deterministic on an
-  append-only index.
+  driver-side reads of up to ``pages_per_batch`` pages over one
+  unsliced ``search_after`` cursor without a PIT (default sort
+  ``@timestamp:asc``). The **offset is the sort cursor** — the same
+  property that makes task retries safe in the batch scan makes
+  exactly-once micro-batches possible here. Correct for moderate
+  ingest rates; zero executor coordination.
+- ``EsDumpTimeSliceStreamReader`` (``stream_mode=timeslice``, behind
+  the CLI's ``--follow``): a full ``DataSourceStreamReader`` whose
+  offset is a **timestamp watermark** and whose micro-batches fan out
+  over N server-side slices read *on executors* with the batch cursor
+  (``search_after`` + PIT by default) — the scale path for log-style
+  indices (the reference's domain is monitoring logs with
+  ``@timestamp``). Each batch is the half-open range
+  ``(start_ts, end_ts]`` pushed down as a Lucene range clause, so
+  replay of a committed batch is deterministic on an append-only
+  index.
 """
 
 from __future__ import annotations
 
+import itertools
+from dataclasses import replace
 from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql.datasource import (
@@ -40,11 +47,13 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from dump_es_parquet_spark.coerce_py import coerce_doc, flatten_doc
-from dump_es_parquet_spark.sources.client import (
-    iter_hits,
-    with_retry,
-    with_sort_tiebreaker,
+from dump_es_parquet_spark.sources.client import with_retry
+from dump_es_parquet_spark.sources.datasource import _make_client, coerce_hits
+from dump_es_parquet_spark.sources.scan import (
+    DEFAULT_SORT,
+    ScanOptions,
+    effective_slices,
+    iter_slice,
 )
 
 
@@ -56,11 +65,13 @@ class EsDumpStreamReader(SimpleDataSourceStreamReader):
         self.schema = schema
         self.options = options
         self.pages_per_batch = int(options.get("pages_per_batch", "4"))
-
-    def _client(self):
-        from dump_es_parquet_spark.sources.datasource import _make_client
-
-        return _make_client(self.options)
+        # one unsliced cursor without a PIT: the offset must resume in
+        # a later batch, after the PIT of this one is gone
+        self.scan = replace(
+            ScanOptions.from_esdump(options, sort=DEFAULT_SORT),
+            cursor="search_after",
+            pit=False,
+        )
 
     def initialOffset(self) -> dict:
         # None → first page omits search_after ("from the start"); a
@@ -71,49 +82,18 @@ class EsDumpStreamReader(SimpleDataSourceStreamReader):
     def _read_pages(
         self, start_cursor, max_pages: int | None, stop_cursor=None
     ) -> Tuple[list, list]:
-        client = self._client()
         rows: list[tuple] = []
         cursor = start_cursor
-        flatten = self.options.get("flatten", "false") == "true"
-        multivalue = self.options.get("multivalue", "first")
-        pages = 0
-        while True:
+        if stop_cursor is not None and cursor == stop_cursor:
+            return rows, cursor
+        pages = iter_slice(
+            _make_client(self.options), self.options["index"], self.scan,
+            after=start_cursor,
+        )
+        for hits, cursor in itertools.islice(pages, max_pages):
+            rows.extend(coerce_hits(hits, self.schema, self.scan))
             if stop_cursor is not None and cursor == stop_cursor:
                 break
-            if max_pages is not None and pages >= max_pages:
-                break
-            cur = cursor
-            resp = with_retry(
-                lambda: client.search(
-                    self.options["index"],
-                    q=self.options.get("query"),
-                    _source=None,
-                    # unique tie-breaker: page boundaries must not skip
-                    # docs sharing the last sort value
-                    sort=with_sort_tiebreaker(
-                        self.options.get("sort", "@timestamp:asc"), pit=False
-                    ),
-                    size=int(self.options.get("size", "500")),
-                    scroll=None,
-                    search_after=cur,
-                ),
-                max_retries=3,
-                backoff_s=1.0,
-            )
-            hits = resp["hits"]["hits"]
-            if not hits:
-                break
-            for h in hits:
-                src = h["_source"]
-                if flatten:
-                    src = flatten_doc(src)
-                rows.append(coerce_doc(src, self.schema, multivalue))
-            nxt = resp.get("last_sort")
-            if nxt is None or nxt == cursor:
-                cursor = nxt if nxt is not None else cursor
-                break
-            cursor = nxt
-            pages += 1
         return rows, cursor
 
     def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
@@ -138,9 +118,9 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
     (one size-1 sorted search — O(1) driver work per trigger); each
     batch then reads ``ts ∈ (start, end]`` as a pushed-down Lucene
     range clause, split over ``slices`` server-side slices, one
-    executor task per slice (the same sliced-scroll scan as the batch
-    source). Assumes an append-only index whose timestamp never
-    decreases — the log-shipping shape the reference dumps
+    executor task per slice (the same sliced scan as the batch
+    source, cursor included). Assumes an append-only index whose
+    timestamp never decreases — the log-shipping shape the reference dumps
     (``dump-es-parquet:219-302`` always sorts ``@timestamp``); a doc
     back-filled below a committed watermark is missed, exactly as it
     would be by the reference's next incremental dump.
@@ -150,11 +130,7 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
         self.schema = schema
         self.options = options
         self.ts_field = options.get("ts_field", "@timestamp")
-
-    def _client(self):
-        from dump_es_parquet_spark.sources.datasource import _make_client
-
-        return _make_client(self.options)
+        self.scan = ScanOptions.from_esdump(options)
 
     @staticmethod
     def _num(v):
@@ -179,16 +155,16 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
         silently replay ranges. Bounding per-task work is partitions()'
         job (``chunk_seconds``), not the offset's."""
         resp = with_retry(
-            lambda: self._client().search(
+            lambda: _make_client(self.options).search(
                 self.options["index"],
-                q=self.options.get("query"),
+                q=self.scan.query,
                 _source=[self.ts_field],
                 sort=f"{self.ts_field}:desc",
                 size=1,
                 scroll=None,
             ),
-            max_retries=3,
-            backoff_s=1.0,
+            max_retries=self.scan.max_retries,
+            backoff_s=self.scan.backoff_s,
         )
         hits = resp["hits"]["hits"]
         if not hits:
@@ -215,7 +191,7 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
         s, e = start.get("ts"), end.get("ts")
         if e is None or s == e:
             return [InputPartition((0, 1, s, e))]
-        n = max(1, int(self.options.get("slices", "8")))
+        n = effective_slices(self.scan)
         chunk = self._num(self.options.get("chunk_seconds"))
         s_n, e_n = self._num(s), self._num(e)
         if chunk and s_n is not None and e_n is not None and e_n > s_n:
@@ -235,32 +211,13 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
     def read(self, partition: InputPartition) -> Iterator[Tuple]:
         i, n, start, end = partition.value
         if end is None or start == end:
-            return iter(())
-        user_q = self.options.get("query")
+            return
+        user_q = self.scan.query
         rng = self._range_clause(self.ts_field, start, end)
-        q = f"({user_q}) AND ({rng})" if user_q else rng
-        flatten = self.options.get("flatten", "false") == "true"
-        multivalue = self.options.get("multivalue", "first")
-
-        def rows() -> Iterator[Tuple]:
-            for hit in iter_hits(
-                self._client(),
-                self.options["index"],
-                q=q,
-                _source=None,
-                sort=self.options.get("sort"),
-                size=int(self.options.get("size", "500")),
-                scroll=self.options.get("scroll", "1h"),
-                slice_spec={"id": i, "max": n} if n > 1 else None,
-                max_retries=3,
-                backoff_s=1.0,
-            ):
-                src = hit["_source"]
-                if flatten:
-                    src = flatten_doc(src)
-                yield coerce_doc(src, self.schema, multivalue)
-
-        return rows()
+        opts = replace(self.scan, query=f"({user_q}) AND ({rng})" if user_q else rng)
+        client = _make_client(self.options)
+        for hits, _ in iter_slice(client, self.options["index"], opts, i, n):
+            yield from coerce_hits(hits, self.schema, opts)
 
     def commit(self, end: dict) -> None:
         pass  # nothing server-side to release: ranges are stateless

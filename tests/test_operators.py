@@ -1035,6 +1035,24 @@ def test_one_slice_frame_arrow_semantics(spark):
     assert empty.count() == 0 and empty.columns == ["k", "v"]
 
 
+def test_one_slice_frame_pickled_fallback(spark):
+    """A row pyarrow cannot convert — an int beyond int64 where a
+    string is declared raises ArrowTypeError — takes the one-slice
+    pickled fallback (whose string column accepts any object) and
+    round-trips; the Arrow path builds no RDD scan."""
+    from dump_es_parquet_spark.operators.tables import one_slice_frame
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    big = one_slice_frame(spark, [("a", 2**70), ("b", None)], "k string, s string")
+    assert big.rdd.getNumPartitions() == 1
+    assert "ExistingRDD" in plan(big)
+    assert sorted(tuple(r) for r in big.collect()) == [("a", str(2**70)), ("b", None)]
+    ok = one_slice_frame(spark, [("a", str(2**70))], "k string, s string")
+    assert "ExistingRDD" not in plan(ok)
+
+
 class _SplitProbeStub:
     """Duck-typed frame for _scan_splits_at_least: non-local URIs have
     no cheap size probe, so the files-count>=width short-circuit must

@@ -550,8 +550,12 @@ def test_union_find_agrees_with_distributed_fixpoint_random(spark, monkeypatch):
     batch of random-ish graphs (long chains, stars, merged rings) —
     the distributed fixpoint is too slow for per-example Hypothesis,
     so this pins a handful of shapes explicitly."""
+    from pyspark.sql.conf import RuntimeConfig
+
     import dump_es_parquet_spark.operators.dedup as dd
 
+    conf_sets = []
+    real_set = RuntimeConfig.set
     graphs = [
         [(i, i + 1) for i in range(12)],                      # chain
         [(0, i) for i in range(1, 10)],                       # star
@@ -566,6 +570,13 @@ def test_union_find_agrees_with_distributed_fixpoint_random(spark, monkeypatch):
             r.node: r.label for r in dd._min_labels_driver_union_find(pairs).collect()
         }
         monkeypatch.setattr(dd, "SMALL_EDGE_UNION_FIND", -1)
+        monkeypatch.setattr(
+            RuntimeConfig, "set",
+            lambda self, k, v: (conf_sets.append(k), real_set(self, k, v))[1],
+        )
         dist = {r.node: r.label for r in dd._component_min_labels(pairs).collect()}
+        monkeypatch.setattr(RuntimeConfig, "set", real_set)
         monkeypatch.setattr(dd, "SMALL_EDGE_UNION_FIND", 200_000)
         assert driver == dist, edges
+    # the fixpoint sizes its frames explicitly: no session conf changes
+    assert conf_sets == []

@@ -128,60 +128,88 @@ def test_esdump_timeslice_stream(spark):
     assert out.groupBy("kind").count().count() == 2
 
 
-def test_timeslice_reader_batches_partition_the_timeline():
+def test_timeslice_reader_batches_partition_the_timeline(monkeypatch):
     """Driver-level contract: consecutive (start, end] batches tile the
     timeline with no overlap and no gap, and slices within a batch are
-    disjoint."""
+    disjoint — under every batch cursor: search_after + PIT (default),
+    scroll, and search_after without PIT (single-slice)."""
     import json
 
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+    from dump_es_parquet_spark.sources.client import MockES
+    from dump_es_parquet_spark.sources.scan import ScanOptions
     from dump_es_parquet_spark.streaming.es_stream import (
         EsDumpTimeSliceStreamReader,
     )
 
+    calls: list = []
+    for method in ("search", "scroll", "open_pit"):
+        real = getattr(MockES, method)
+        monkeypatch.setattr(
+            MockES,
+            method,
+            lambda self, *a, _m=method, _real=real, **kw: (
+                calls.append((_m, kw)), _real(self, *a, **kw)
+            )[1],
+        )
+
     docs = [{"n": i, "@timestamp": 100 + i // 4} for i in range(80)]
-    opts = {
-        "fixture_json": json.dumps(
-            {
-                "ix": {
-                    "mapping": {
-                        "n": {"type": "integer"},
-                        "@timestamp": {"type": "long"},
-                    },
-                    "docs": docs,
-                }
+    fixture = json.dumps(
+        {
+            "ix": {
+                "mapping": {
+                    "n": {"type": "integer"},
+                    "@timestamp": {"type": "long"},
+                },
+                "docs": docs,
             }
-        ),
-        "index": "ix",
-        "slices": "3",
-        "size": "7",
-    }
+        }
+    )
     schema = StructType(
         [StructField("n", IntegerType()), StructField("@timestamp", LongType())]
     )
-    rdr = EsDumpTimeSliceStreamReader(schema, opts)
-    start = rdr.initialOffset()
-    assert start == {"ts": None}
-    # batch 1: everything up to a mid-point watermark (simulate a
-    # latestOffset probe taken mid-ingest)
-    mid = {"ts": 110}
-    seen: list = []
-    parts = rdr.partitions(start, mid)
-    assert len(parts) == 3
-    per_slice = [sorted(r[0] for r in rdr.read(p)) for p in parts]
-    for i, a in enumerate(per_slice):
-        for b in per_slice[i + 1:]:
-            assert not (set(a) & set(b))  # slices are disjoint
-    seen += [n for s in per_slice for n in s]
-    # batch 2: watermark advances to the true max — rest arrives once
-    end = rdr.latestOffset()
-    assert end == {"ts": 100 + 79 // 4}
-    for p in rdr.partitions(mid, end):
-        seen += [r[0] for r in rdr.read(p)]
-    assert sorted(seen) == list(range(80))  # no gap, no overlap
-    # empty batch: equal offsets read nothing
-    assert list(rdr.read(rdr.partitions(end, end)[0])) == []
+    for scan in (
+        ScanOptions(slices=3, size=7, sort=None),  # as the CLI passes it
+        ScanOptions(slices=3, size=7, sort=None, cursor="scroll", pit=False),
+        ScanOptions(slices=3, size=7, sort=None, pit=False),
+    ):
+        opts = {**scan.esdump_options(), "fixture_json": fixture, "index": "ix"}
+        rdr = EsDumpTimeSliceStreamReader(schema, opts)
+        n_slices = 1 if scan.cursor == "search_after" and not scan.pit else 3
+        calls.clear()
+        start = rdr.initialOffset()
+        assert start == {"ts": None}
+        # batch 1: everything up to a mid-point watermark (simulate a
+        # latestOffset probe taken mid-ingest)
+        mid = {"ts": 110}
+        seen: list = []
+        parts = rdr.partitions(start, mid)
+        assert len(parts) == n_slices
+        per_slice = [sorted(r[0] for r in rdr.read(p)) for p in parts]
+        for i, a in enumerate(per_slice):
+            for b in per_slice[i + 1:]:
+                assert not (set(a) & set(b))  # slices are disjoint
+        seen += [n for s in per_slice for n in s]
+        # the cursor each slice read with
+        searches = [kw for m, kw in calls if m == "search"]
+        if scan.cursor == "scroll":
+            assert all(kw["scroll"] and kw.get("pit_id") is None for kw in searches)
+            assert not any(m == "open_pit" for m, _ in calls)
+            assert any(m == "scroll" for m, _ in calls)
+        else:
+            assert all(kw["scroll"] is None for kw in searches)
+            assert any(kw["search_after"] is not None for kw in searches)
+            assert all((kw["pit_id"] is not None) == scan.pit for kw in searches)
+            assert sum(m == "open_pit" for m, _ in calls) == (n_slices if scan.pit else 0)
+        # batch 2: watermark advances to the true max — rest arrives once
+        end = rdr.latestOffset()
+        assert end == {"ts": 100 + 79 // 4}
+        for p in rdr.partitions(mid, end):
+            seen += [r[0] for r in rdr.read(p)]
+        assert sorted(seen) == list(range(80))  # no gap, no overlap
+        # empty batch: equal offsets read nothing
+        assert list(rdr.read(rdr.partitions(end, end)[0])) == []
 
 
 def test_mockes_range_bounds():
@@ -433,43 +461,69 @@ def test_timeslice_chunked_partitions():
 
 def test_cli_follow_once(spark, tmp_path):
     """`--follow --follow-once` drains the index to parquet through the
-    timeslice stream and is idempotent on re-run (checkpoint holds)."""
+    timeslice stream and is idempotent on re-run (checkpoint holds).
+    The stream reads with the batch dump's scan flags: ``--fields``
+    requests only the listed ``_source`` fields, and every cursor
+    (``--cursor scroll``, ``--no-pit``) and ``--sort`` drains the index
+    exactly once."""
     import json
 
     from dump_es_parquet_spark.cli import main
 
-    docs = [{"n": i, "ts": 2000 + i} for i in range(250)]
+    docs = [{"n": i, "ts": 2000 + i, "tag": f"t{i % 3}"} for i in range(250)]
     fixture = {
         "flw": {
-            "mapping": {"n": {"type": "integer"}, "ts": {"type": "long"}},
+            "mapping": {
+                "n": {"type": "integer"},
+                "ts": {"type": "long"},
+                "tag": {"type": "keyword"},
+            },
             "docs": docs,
         }
     }
     fp = tmp_path / "fixture.json"
     fp.write_text(json.dumps(fixture))
-    argv = [
-        "flw",
-        "--follow",
-        "--follow-once",
-        "--fixture-json",
-        str(fp),
-        "--out",
-        str(tmp_path),
-        "--ts-field",
-        "ts",
-        "--slices",
-        "2",
-        "--chunk-seconds",
-        "100",
-        "--quiet",
-    ]
-    assert main(argv) == 0
+
+    def argv(out, *extra):
+        return [
+            "flw",
+            "--follow",
+            "--follow-once",
+            "--fixture-json",
+            str(fp),
+            "--out",
+            str(out),
+            "--ts-field",
+            "ts",
+            "--slices",
+            "2",
+            "--chunk-seconds",
+            "100",
+            "--quiet",
+            *extra,
+        ]
+
+    assert main(argv(tmp_path)) == 0
     out = spark.read.parquet(str(tmp_path / "flw"))
     assert out.count() == 250
     assert out.select("n").distinct().count() == 250
+    assert out.filter("tag IS NULL").count() == 0
     # re-run: nothing new on the server — no duplicates appended
-    assert main(argv) == 0
+    assert main(argv(tmp_path)) == 0
     assert spark.read.parquet(str(tmp_path / "flw")).count() == 250
+
+    for name, extra in {
+        "fields": ["--fields", "n,ts"],
+        "scroll": ["--cursor", "scroll"],
+        "nopit": ["--no-pit"],
+        "sort": ["--sort", "n:desc"],
+    }.items():
+        assert main(argv(tmp_path / name, *extra)) == 0, name
+        got = spark.read.parquet(str(tmp_path / name / "flw"))
+        assert got.count() == 250, name
+        assert got.select("n").distinct().count() == 250, name
+        # only --fields leaves the unrequested column empty
+        assert got.filter("tag IS NULL").count() == (250 if name == "fields" else 0)
 
 
 def test_cli_follow_once_with_dedup_key(spark, tmp_path):
