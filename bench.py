@@ -275,43 +275,39 @@ def main() -> int:
         suspects.setdefault(q, []).append("control_spike")
     for q in cpu_flags(cpu_windows):
         suspects.setdefault(q, []).append("cpu_sys_steal")
-    perquery_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_PERQUERY.json"
-    )
-    try:
-        tmp = perquery_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "metric": "total_query_seconds",
-                    "value": round(total, 2),
-                    "unit": "sec",
-                    "sf": sf,
-                    "cpus": int(cpus),
-                    "queries": timings,
-                    "extra": extra_timings,
-                    "cold": cold,
-                    "retried": retried,
-                    "control": {
-                        "query": CONTROL_QUERY,
-                        "every": CONTROL_EVERY,
-                        "samples": control_samples,
-                        "floor": min(
-                            (s for _, s in control_samples), default=None
-                        ),
-                    },
-                    "cpu_windows": cpu_windows,
-                    "suspect": {
-                        k: suspects[k] for k in sorted(suspects)
-                    },
-                },
-                fh,
-                indent=1,
-            )
-        os.replace(tmp, perquery_path)
-        print(f"# wrote {perquery_path}", file=sys.stderr)
-    except OSError as e:
-        print(f"# BENCH_PERQUERY write failed: {e}", file=sys.stderr)
+    # The canonical name is overwritten by every run at any core
+    # count; the per-core-count copy keeps runs at different core
+    # counts side by side.
+    bench_dir = os.path.dirname(os.path.abspath(__file__))
+    perquery = {
+        "metric": "total_query_seconds",
+        "value": round(total, 2),
+        "unit": "sec",
+        "sf": sf,
+        "cpus": int(cpus),
+        "queries": timings,
+        "extra": extra_timings,
+        "cold": cold,
+        "retried": retried,
+        "control": {
+            "query": CONTROL_QUERY,
+            "every": CONTROL_EVERY,
+            "samples": control_samples,
+            "floor": min((s for _, s in control_samples), default=None),
+        },
+        "cpu_windows": cpu_windows,
+        "suspect": {k: suspects[k] for k in sorted(suspects)},
+    }
+    for name in ("BENCH_PERQUERY.json", f"BENCH_PERQUERY_c{int(cpus)}.json"):
+        perquery_path = os.path.join(bench_dir, name)
+        try:
+            tmp = perquery_path + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump(perquery, fh, indent=1)
+            os.replace(tmp, perquery_path)
+            print(f"# wrote {perquery_path}", file=sys.stderr)
+        except OSError as e:
+            print(f"# {name} write failed: {e}", file=sys.stderr)
 
     # the ONE stdout line (everything else goes to stderr), flushed
     # before spark.stop() so a slow JVM teardown can't truncate it.

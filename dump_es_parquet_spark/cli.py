@@ -170,7 +170,6 @@ def _follow(spark, args, scan: ScanOptions) -> int:
         spark.readStream.format("esdump")
         .options(**scan.esdump_options())
         .option("index", args.index)
-        .option("stream_mode", "timeslice")
         .option("ts_field", args.ts_field)
     )
     if args.chunk_seconds:

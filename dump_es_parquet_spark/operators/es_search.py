@@ -357,18 +357,6 @@ def _tz_parse(tz: str):
     return "iana", tz
 
 
-def _tz_offset_ms(tz: str) -> int:
-    """``time_zone`` as a FIXED UTC offset in millis — the callers
-    that cannot express DST (fixed epoch grids) route through this
-    and raise on IANA names."""
-    kind, v = _tz_parse(tz)
-    if kind != "fixed":
-        raise ValueError(
-            f"time_zone {tz!r}: this grid needs a fixed ±HH:MM offset"
-        )
-    return v
-
-
 import functools
 
 
@@ -7631,8 +7619,9 @@ def queries_to_conjuncts(
     # into the JVM as Arrow bytes once, so no materialization ever
     # launches a Python runner (r18 — previously a one-slice pickled
     # RDD paid ~150 ms of worker launch per consumer). All values are
-    # normalized above (floats coerced) and pyarrow raises on lossy
-    # conversions.
+    # normalized above (floats coerced): pyarrow does not reject every
+    # lossy conversion (``pa.array([1.5], pa.int32())`` gives ``[1]``),
+    # so the rows must already hold the schema's types.
     df = one_slice_frame(
         spark,
         rows,

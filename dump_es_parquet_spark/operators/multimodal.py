@@ -2,8 +2,8 @@
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
 The container has no image/audio codecs, so the *decode* step is a
-deterministic fake behind ``decode_image_stub`` (clearly marked; a real
-deployment swaps in PIL/ffmpeg inside the same UDF signature). The
+deterministic fake inside ``decode_metadata``'s UDF (clearly marked; a
+real deployment swaps in PIL/ffmpeg inside the same UDF signature). The
 Spark-side plumbing — binary schema, Arrow batch shape, mapInPandas
 partitioning, metadata extraction — is real and tested.
 
@@ -16,9 +16,6 @@ batch size (``spark.sql.execution.arrow.maxRecordsPerBatch``).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,42 +50,6 @@ def binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sha2("payload", 256).alias("sha256"),
         F.lower(F.hex(F.substring("payload", 1, 8))).alias("magic_hex"),
     ).orderBy("doc_id")
-
-
-def decode_image_stub(payload: bytes) -> tuple[int, int, int]:
-    """STUB decoder — deterministic fake geometry from payload length.
-
-    A real deployment replaces this body with e.g.::
-
-        from PIL import Image
-        img = Image.open(io.BytesIO(payload)); return img.width, ...
-
-    (image libs are not available in this container).
-    """
-    n = len(payload)
-    width = 64 + n % FAKE_W_MOD
-    height = 64 + n % FAKE_H_MOD
-    n_frames = 1 + n % 4
-    return width, height, n_frames
-
-
-def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: Arrow batch in → decoded-metadata batch out.
-    Runs once per Arrow batch per partition; memory is bounded by
-    batch size, not partition size."""
-    for pdf in batches:
-        decoded = pdf["payload"].map(decode_image_stub)
-        out = pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": pdf["payload"].map(len),
-                "width": decoded.map(lambda t: t[0]),
-                "height": decoded.map(lambda t: t[1]),
-                "n_frames": decoded.map(lambda t: t[2]),
-            }
-        )
-        yield out
 
 
 DECODE_SCHEMA = (

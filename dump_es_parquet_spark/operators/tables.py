@@ -75,10 +75,6 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def _stable_metric_name(prefix: str, df: DataFrame) -> str:
     """Deterministic CollectMetrics name for ``df.observe(...)``.
 

@@ -616,26 +616,23 @@ def iter_pages_search_after(
     backoff_s: float = 1.0,
     pit: bool = False,
     keep_alive: str = "1h",
-    search_after: list | None = None,
-) -> Iterator[tuple[list[dict], list | None]]:
+) -> Iterator[list[dict]]:
     """``search_after`` pagination loop — the retry-idempotent cursor
     (SURVEY.md §7 hard part 2): unlike a scroll id, the sort-key cursor
     is *resumable*, so a retried page re-requests exactly where the
     last successful page ended instead of consuming a one-shot
     server-side cursor.
 
-    Yields each page's hits with the cursor that resumes after it;
-    ``search_after`` resumes after such a cursor (None → from the
-    start, the first request then omits ``search_after`` entirely).
-    The sort always ends in a unique tie-breaker (see
-    ``with_sort_tiebreaker``). With ``pit=True`` a point-in-time
-    context is opened per slice and threaded through every page,
-    giving the same snapshot isolation as the reference's scroll
-    context (dump-es-parquet:224,261) — without it, a dump concurrent
-    with writes can see skew or duplicates."""
+    Yields each page's raw hit dicts, from the start (the first
+    request omits ``search_after``). The sort always ends in a unique
+    tie-breaker (see ``with_sort_tiebreaker``). With ``pit=True`` a
+    point-in-time context is opened per slice and threaded through
+    every page, giving the same snapshot isolation as the reference's
+    scroll context (dump-es-parquet:224,261) — without it, a dump
+    concurrent with writes can see skew or duplicates."""
     sort_eff = with_sort_tiebreaker(sort, pit)
     pit_id = client.open_pit(index, keep_alive)["id"] if pit else None
-    cursor = search_after
+    cursor = None
     try:
         while True:
             resp = with_retry(
@@ -657,8 +654,8 @@ def iter_pages_search_after(
             hits = resp["hits"]["hits"]
             if not hits:
                 return
+            yield hits
             nxt = resp.get("last_sort")
-            yield hits, cursor if nxt is None else nxt
             if nxt is None or nxt == cursor:
                 return
             cursor = nxt
@@ -723,13 +720,13 @@ def iter_hits_search_after(
     max_retries: int | None = 3, backoff_s: float = 1.0, pit: bool = False,
     keep_alive: str = "1h",
 ) -> Iterator[dict]:
-    """The hits of :func:`iter_pages_search_after`, from the start."""
+    """The hits of :func:`iter_pages_search_after`."""
     pages = iter_pages_search_after(
         client, index, q=q, _source=_source, sort=sort, size=size,
         slice_spec=slice_spec, max_retries=max_retries, backoff_s=backoff_s,
         pit=pit, keep_alive=keep_alive,
     )
-    return (hit for hits, _ in pages for hit in hits)
+    return (hit for hits in pages for hit in hits)
 
 
 def iter_hits(client, index: str, **kw) -> Iterator[dict]:

@@ -19,8 +19,8 @@ Options:
   TTL), ``cursor`` (``search_after`` default, or ``scroll``), ``pit``
   (``false``: search_after without a point-in-time, single-slice),
   ``slices``, ``flatten``, ``multivalue``
-- streaming only (``streaming/es_stream.py``): ``stream_mode``,
-  ``pages_per_batch``, ``ts_field``, ``start_ts``, ``chunk_seconds``
+- streaming only (``streaming/es_stream.py``): ``ts_field``,
+  ``start_ts``, ``chunk_seconds``
 
 Rows are coerced *in the reader* with the pure-Python twin of the
 expression coercion (``coerce_py``) — the data is already Python
@@ -221,31 +221,15 @@ class EsDumpDataSource(DataSource):
         {"byte", "short", "integer", "long", "keyword", "date"}
     )
 
-    def simpleStreamReader(self, schema: StructType):
-        """Micro-batch streaming over search_after cursors —
-        ``spark.readStream.format("esdump")`` (see
-        ``streaming/es_stream.py``)."""
-        from dump_es_parquet_spark.streaming.es_stream import EsDumpStreamReader
-
-        return EsDumpStreamReader(schema, dict(self.options))
-
     def streamReader(self, schema: StructType):
-        """``stream_mode=timeslice`` → the partitioned, executor-side
-        stream reader (timestamp-watermark offsets, N slices per
-        batch); any other value falls back to the simple cursor reader
-        (Spark calls ``simpleStreamReader`` when this raises
-        NOT_IMPLEMENTED)."""
-        if self.options.get("stream_mode") == "timeslice":
-            from dump_es_parquet_spark.streaming.es_stream import (
-                EsDumpTimeSliceStreamReader,
-            )
-
-            return EsDumpTimeSliceStreamReader(schema, dict(self.options))
-        from pyspark.errors import PySparkNotImplementedError
-
-        raise PySparkNotImplementedError(
-            errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "streamReader"}
+        """``spark.readStream.format("esdump")``: the partitioned,
+        executor-side stream reader (timestamp-watermark offsets, N
+        slices per batch; see ``streaming/es_stream.py``)."""
+        from dump_es_parquet_spark.streaming.es_stream import (
+            EsDumpTimeSliceStreamReader,
         )
+
+        return EsDumpTimeSliceStreamReader(schema, dict(self.options))
 
     def reader(self, schema: StructType) -> "EsDumpReader":
         client = _make_client(self.options)
@@ -478,7 +462,7 @@ class EsDumpReader(DataSourceReader):
             partition.value,
             effective_slices(opts),
         )
-        for hits, _ in pages:
+        for hits in pages:
             yield from coerce_hits(hits, self.schema, opts)
 
 

@@ -8,7 +8,7 @@ page loop on an executor. That moves the reference's only
 thread/node boundary (HTTP round-trips) onto the cluster and is what
 makes a 100 TB dump feasible — N tasks × page batches instead of one
 cursor. ``iter_slice`` is that page loop for every reader: this scan,
-the ``esdump`` DataSource and both ``esdump`` stream readers.
+the ``esdump`` DataSource and its stream reader.
 
 Pushdown parity (SURVEY.md ops #7-#10): ``query`` (Lucene
 query_string), ``fields`` (``_source`` includes, wildcards), ``sort``
@@ -72,16 +72,15 @@ class ScanOptions:
         return [f.strip() for f in self.fields.split(",")] if self.fields else None
 
     @classmethod
-    def from_esdump(cls, options, sort: str | None = None) -> "ScanOptions":
-        """The ``esdump`` DataSource's string options → ScanOptions;
-        ``sort`` is the calling reader's default when no ``sort``
-        option is given."""
+    def from_esdump(cls, options) -> "ScanOptions":
+        """The ``esdump`` DataSource's string options → ScanOptions
+        (unsorted when no ``sort`` option is given)."""
         parsed = {
             name: parse(options[name])
             for name, parse in ESDUMP_OPTIONS.items()
             if name in options
         }
-        return cls(**{"sort": sort, **parsed})
+        return cls(**{"sort": None, **parsed})
 
     def esdump_options(self) -> dict[str, str]:
         """The inverse of :meth:`from_esdump`: these options as
@@ -95,8 +94,8 @@ class ScanOptions:
 
 
 #: ``esdump`` option name → parser, for the options that are scan
-#: options (the rest — ``url``, ``index``, ``stream_mode``, ... —
-#: address the server or pick a reader)
+#: options (the rest — ``url``, ``index``, ``ts_field``, ... —
+#: address the server or drive the stream reader's offsets)
 ESDUMP_OPTIONS = dict(
     query=str, fields=str, sort=str, size=int, scroll=str, cursor=str,
     pit=lambda v: v != "false", slices=int,
@@ -121,15 +120,11 @@ def iter_slice(
     opts: ScanOptions,
     slice_id: int = 0,
     n_slices: int = 1,
-    *,
-    after: list | None = None,
-) -> Iterator[tuple[list[dict], list | None]]:
-    """Pages of slice ``slice_id`` of ``n_slices``, each with the
-    cursor that resumes after it (None under scroll). The one place
-    that decides how a slice is read: the cursor, the pushed query,
-    ``_source`` includes, sort, page size and retries all come from
-    ``opts``; ``after`` resumes a ``search_after`` cursor (a scroll
-    always starts from the beginning)."""
+) -> Iterator[list[dict]]:
+    """Hit pages of slice ``slice_id`` of ``n_slices``, from the start.
+    The one place that decides how a slice is read: the cursor, the
+    pushed query, ``_source`` includes, sort, page size and retries
+    all come from ``opts``."""
     kw = dict(
         q=opts.query,
         _source=opts.source_includes(),
@@ -145,11 +140,9 @@ def iter_slice(
             index,
             pit=opts.pit,
             keep_alive=opts.scroll,  # same TTL knob as scroll mode
-            search_after=after,
             **kw,
         )
-    pages = iter_pages_scroll(client, index, scroll=opts.scroll, **kw)
-    return ((hits, None) for hits in pages)
+    return iter_pages_scroll(client, index, scroll=opts.scroll, **kw)
 
 
 def expand_pattern(client, pattern: str, opts: ScanOptions) -> list[str]:
@@ -195,7 +188,7 @@ def read_index_raw(
     def read_slices(slice_ids: Iterator[int]) -> Iterator[str]:
         client = client_factory()
         for sid in slice_ids:
-            for hits, _ in iter_slice(client, index, opts, sid, n):
+            for hits in iter_slice(client, index, opts, sid, n):
                 for hit in hits:
                     # only _source is read; ES metadata is discarded
                     # (reference :243, 247, 252)

@@ -12,101 +12,35 @@ Registered through the same ``esdump`` DataSource:
          .option("index", ...).option(...)  # same options as batch
          .load()
 
-Both readers parse the scan options into one ``ScanOptions`` as the
-batch reader does, and read through the batch scan's slice iterator
-(``scan.iter_slice``):
-
-- ``EsDumpStreamReader`` (default): ``SimpleDataSourceStreamReader``,
-  driver-side reads of up to ``pages_per_batch`` pages over one
-  unsliced ``search_after`` cursor without a PIT (default sort
-  ``@timestamp:asc``). The **offset is the sort cursor** — the same
-  property that makes task retries safe in the batch scan makes
-  exactly-once micro-batches possible here. Correct for moderate
-  ingest rates; zero executor coordination.
-- ``EsDumpTimeSliceStreamReader`` (``stream_mode=timeslice``, behind
-  the CLI's ``--follow``): a full ``DataSourceStreamReader`` whose
-  offset is a **timestamp watermark** and whose micro-batches fan out
-  over N server-side slices read *on executors* with the batch cursor
-  (``search_after`` + PIT by default) — the scale path for log-style
-  indices (the reference's domain is monitoring logs with
-  ``@timestamp``). Each batch is the half-open range
-  ``(start_ts, end_ts]`` pushed down as a Lucene range clause, so
-  replay of a committed batch is deterministic on an append-only
-  index.
+``EsDumpTimeSliceStreamReader`` is the one stream reader (behind the
+CLI's ``--follow`` too). It parses the scan options into one
+``ScanOptions`` as the batch reader does and reads through the batch
+scan's slice iterator (``scan.iter_slice``). Its offset is a
+**timestamp watermark** on ``ts_field`` (default ``@timestamp``), and
+each micro-batch fans out over N server-side slices read *on
+executors* with the batch cursor (``search_after`` + PIT by default) —
+the scale path for log-style indices (the reference's domain is
+monitoring logs with ``@timestamp``). Each batch is the half-open
+range ``(start_ts, end_ts]`` pushed down as a Lucene range clause, so
+replay of a committed batch is deterministic on an append-only index.
+Extra options: ``ts_field``, ``start_ts`` (initial watermark) and
+``chunk_seconds`` (time tiling of a batch into bounded tasks).
 """
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import replace
 from typing import Iterator, Sequence, Tuple
 
-from pyspark.sql.datasource import (
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
 
 from dump_es_parquet_spark.sources.client import with_retry
 from dump_es_parquet_spark.sources.datasource import _make_client, coerce_hits
 from dump_es_parquet_spark.sources.scan import (
-    DEFAULT_SORT,
     ScanOptions,
     effective_slices,
     iter_slice,
 )
-
-
-class EsDumpStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch reader: offset = ``{"cursor": <sort values>|null}``;
-    each batch reads up to ``pages_per_batch`` search_after pages."""
-
-    def __init__(self, schema, options: dict):
-        self.schema = schema
-        self.options = options
-        self.pages_per_batch = int(options.get("pages_per_batch", "4"))
-        # one unsliced cursor without a PIT: the offset must resume in
-        # a later batch, after the PIT of this one is gone
-        self.scan = replace(
-            ScanOptions.from_esdump(options, sort=DEFAULT_SORT),
-            cursor="search_after",
-            pit=False,
-        )
-
-    def initialOffset(self) -> dict:
-        # None → first page omits search_after ("from the start"); a
-        # literal [0] cursor would mean "after sort value 0" on a real
-        # server and silently skip documents
-        return {"cursor": None}
-
-    def _read_pages(
-        self, start_cursor, max_pages: int | None, stop_cursor=None
-    ) -> Tuple[list, list]:
-        rows: list[tuple] = []
-        cursor = start_cursor
-        if stop_cursor is not None and cursor == stop_cursor:
-            return rows, cursor
-        pages = iter_slice(
-            _make_client(self.options), self.options["index"], self.scan,
-            after=start_cursor,
-        )
-        for hits, cursor in itertools.islice(pages, max_pages):
-            rows.extend(coerce_hits(hits, self.schema, self.scan))
-            if stop_cursor is not None and cursor == stop_cursor:
-                break
-        return rows, cursor
-
-    def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
-        rows, cursor = self._read_pages(start["cursor"], self.pages_per_batch)
-        return iter(rows), {"cursor": cursor}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[Tuple]:
-        """Deterministic replay for recovery: re-walk the cursor range.
-        search_after cursors are resumable, so the same range yields
-        the same rows (the PIT-in-production caveat applies for
-        concurrently-mutating indices)."""
-        rows, _ = self._read_pages(start["cursor"], None, stop_cursor=end["cursor"])
-        return iter(rows)
 
 
 class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
@@ -216,7 +150,7 @@ class EsDumpTimeSliceStreamReader(DataSourceStreamReader):
         rng = self._range_clause(self.ts_field, start, end)
         opts = replace(self.scan, query=f"({user_q}) AND ({rng})" if user_q else rng)
         client = _make_client(self.options)
-        for hits, _ in iter_slice(client, self.options["index"], opts, i, n):
+        for hits in iter_slice(client, self.options["index"], opts, i, n):
             yield from coerce_hits(hits, self.schema, opts)
 
     def commit(self, end: dict) -> None:

@@ -139,17 +139,18 @@ def test_cpu_window_handles_missing_snapshots():
 
 
 def test_perquery_artifact_written_before_summary_in_source():
-    """BENCH_PERQUERY.json must be flushed BEFORE the final stdout
+    """BENCH_PERQUERY.json and its per-core-count copy
+    BENCH_PERQUERY_c{cpus}.json must be flushed BEFORE the final stdout
     line: if the JVM teardown (or a driver timeout) kills the process
-    after the summary, the durable artifact must already exist."""
+    after the summary, the durable artifacts must already exist."""
     import inspect
 
     import bench
 
     src = inspect.getsource(bench.main)
-    assert src.index("BENCH_PERQUERY.json") < src.index(
-        "summary_line(total"
-    )
+    summary_pos = src.index("summary_line(total")
+    assert src.index("BENCH_PERQUERY.json") < summary_pos
+    assert src.index('f"BENCH_PERQUERY_c{int(cpus)}.json"') < summary_pos
 
 
 def test_summary_line_follows_detail_line_in_source():

@@ -28,18 +28,18 @@ def test_stream_is_streaming(spark, sf_dir):
     assert windowed_counts(df).isStreaming
 
 
-def test_esdump_streaming_source(spark):
-    """readStream.format('esdump') micro-batches over search_after
-    cursors and, once drained, equals the batch read."""
+def _live_fixture(n_docs, ts_div):
     import json
 
-    from dump_es_parquet_spark.sources.datasource import register
-
     docs = [
-        {"n": i, "@timestamp": 1748520000 + i, "kind": "a" if i % 2 else "b"}
-        for i in range(1300)
+        {
+            "n": i,
+            "@timestamp": 1748520000 + i // ts_div,
+            "kind": "a" if i % 2 else "b",
+        }
+        for i in range(n_docs)
     ]
-    fixture = json.dumps(
+    return json.dumps(
         {
             "live": {
                 "mapping": {
@@ -51,20 +51,17 @@ def test_esdump_streaming_source(spark):
             }
         }
     )
+
+
+def _drain_esdump_stream(spark, options, table):
+    from dump_es_parquet_spark.sources.datasource import register
+
     register(spark)
-    stream = (
-        spark.readStream.format("esdump")
-        .option("fixture_json", fixture)
-        .option("index", "live")
-        .option("size", "200")
-        .option("pages_per_batch", "2")
-        .option("sort", "@timestamp:asc")
-        .load()
-    )
+    stream = spark.readStream.format("esdump").options(**options).load()
     assert stream.isStreaming
     q = (
         stream.writeStream.format("memory")
-        .queryName("es_stream_t")
+        .queryName(table)
         .outputMode("append")
         .start()
     )
@@ -72,57 +69,47 @@ def test_esdump_streaming_source(spark):
         q.processAllAvailable()
     finally:
         q.stop()
-    out = spark.table("es_stream_t")
+    return spark.table(table)
+
+
+def test_esdump_streaming_source(spark):
+    """readStream.format('esdump') with no stream option at all (default
+    slices, ts_field @timestamp) is the timeslice reader and, once
+    drained, holds every document exactly once."""
+    from pyspark.sql.types import StructType
+
+    from dump_es_parquet_spark.sources.datasource import EsDumpDataSource
+    from dump_es_parquet_spark.streaming.es_stream import (
+        EsDumpTimeSliceStreamReader,
+    )
+
+    options = {
+        "fixture_json": _live_fixture(1300, 1),
+        "index": "live",
+        "size": "200",
+        "sort": "@timestamp:asc",
+    }
+    assert isinstance(
+        EsDumpDataSource(options).streamReader(StructType()),
+        EsDumpTimeSliceStreamReader,
+    )
+    out = _drain_esdump_stream(spark, options, "es_stream_t")
     assert out.count() == 1300
     assert out.select("n").distinct().count() == 1300  # exactly-once
     assert out.groupBy("kind").count().count() == 2
 
 
 def test_esdump_timeslice_stream(spark):
-    """stream_mode=timeslice: the partitioned (executor-side) stream
-    reader drains the index exactly once across N slices."""
-    import json
-
-    from dump_es_parquet_spark.sources.datasource import register
-
-    docs = [
-        {"n": i, "@timestamp": 1748520000 + i // 3, "kind": "a" if i % 2 else "b"}
-        for i in range(900)  # ts ties across slice boundaries on purpose
-    ]
-    fixture = json.dumps(
-        {
-            "live": {
-                "mapping": {
-                    "n": {"type": "integer"},
-                    "@timestamp": {"type": "date"},
-                    "kind": {"type": "keyword"},
-                },
-                "docs": docs,
-            }
-        }
-    )
-    register(spark)
-    stream = (
-        spark.readStream.format("esdump")
-        .option("fixture_json", fixture)
-        .option("index", "live")
-        .option("stream_mode", "timeslice")
-        .option("slices", "4")
-        .option("size", "100")
-        .load()
-    )
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("es_ts_stream_t")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table("es_ts_stream_t")
+    """The partitioned (executor-side) timeslice stream reader drains
+    the index exactly once across N slices."""
+    options = {
+        # ts ties across slice boundaries on purpose
+        "fixture_json": _live_fixture(900, 3),
+        "index": "live",
+        "slices": "4",
+        "size": "100",
+    }
+    out = _drain_esdump_stream(spark, options, "es_ts_stream_t")
     assert out.count() == 900
     assert out.select("n").distinct().count() == 900  # exactly-once
     assert out.groupBy("kind").count().count() == 2
@@ -314,7 +301,6 @@ def test_timeslice_stream_composes_with_windowed_agg(spark):
         spark.readStream.format("esdump")
         .option("fixture_json", fixture)
         .option("index", "ev")
-        .option("stream_mode", "timeslice")
         .option("ts_field", "ts")
         .option("slices", "3")
         .option("size", "128")
@@ -380,7 +366,6 @@ def test_timeslice_stream_restarts_from_checkpoint(spark, tmp_path):
             spark.readStream.format("esdump")
             .option("fixture_json", fixture)
             .option("index", "cp")
-            .option("stream_mode", "timeslice")
             .option("ts_field", "@timestamp")
             .option("slices", "2")
             .option("size", "50")
